@@ -76,7 +76,7 @@ object Bench {
       spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", v))
     // Generic runtime-conf pass-through (same contract as
     // SpillProfile's) so operator-level A/B knobs read via spark.conf
-    // (e.g. spark.graft.mart.factParts) can run under the EXACT bench
+    // (e.g. spark.graft.mart.dimBroadcast) can run under the EXACT bench
     // harness that produces committed legs, not just the profiler:
     //   SPARK_GRAFT_CONF="k1=v1;k2=v2"
     sys.env.get("SPARK_GRAFT_CONF").foreach { kvs =>
@@ -103,27 +103,11 @@ object Bench {
       }
     val confNote: String = sys.env.get("SPARK_GRAFT_CONF")
       .map(v => s""", "conf": "${jsonStr(v)}"""").getOrElse("")
-    // Effective index-ladder policy, stamped EVEN when defaulted (r18
-    // advice fix): the r17 tier A/B sidecars recorded only the knob
-    // string, so replaying their conf on a HEAD whose DEFAULTS moved
-    // (headroom 0 → 0.35) would not reproduce the leg. A leg is
-    // self-describing only if the policy it actually ran under is in
-    // the file, not inferable from the commit date.
-    def ladderNote: String = {
-      val cacheLevel = spark.conf.getOption("spark.graft.index.cacheLevel")
-        .getOrElse("auto")
-      val priority = spark.conf.getOption("spark.graft.index.residencyPriority")
-        .forall(_ != "off")
-      val headroom = operators.Dedup.IndexHolder.confHeadroom(spark)
-      val healMax = operators.Dedup.IndexHolder.confLong(spark,
-        "spark.graft.index.healTierMaxMB", 64L, min = 0L)
-      s""", "ladder": {"cacheLevel": "${jsonStr(cacheLevel)}", "residencyPriority": $priority, "headroomFraction": $headroom, "healTierMaxMB": $healMax}"""
-    }
-    // JVM heap, stamped for the same reason as the ladder: the index
-    // budget and spill onset both scale with it, so two legs at
-    // different -Xmx are not comparable absolutes (the r17 sf100
-    // retake OOMed at 8g during the bucketed-silver sort-write; the
-    // r18 retake runs bigger — the stamp is what makes that visible).
+    // JVM heap, stamped because the storage pool and spill onset both
+    // scale with it, so two legs at different -Xmx are not comparable
+    // absolutes (the r17 sf100 retake OOMed at 8g during the
+    // bucketed-silver sort-write; the r18 retake runs bigger — the
+    // stamp is what makes that visible).
     val heapNote: String =
       f""", "heap_gb": ${Runtime.getRuntime.maxMemory / (1L << 30)}"""
     // Effective IO codec + spill compression, read back from the LIVE
@@ -540,7 +524,7 @@ object Bench {
       val pr = q.probesMs.map(r3).mkString("[", ",", "]")
       s"""  "${q.name}": {"min_s": ${r3(q.min)}, "median_s": ${r3(q.median)}, "runs": ${q.runs}, "shuffle_write_mb": ${r3(q.shuffleWriteMb)}, "shuffle_read_mb": ${r3(q.shuffleReadMb)}, "spill_mb": ${r3(q.spillMb)}, "probe_ms": $pr}"""
     }.mkString(
-      s"""{\n  "_meta": {"round": "$roundTag"$roundEnvNote$confNote$ladderNote$heapNote$codecNote, "sf": "$sfDir", "cpus": $cpus, "init_partitions": $initPartitions, "action": "noop-write", "attempt_order": "round-robin", "index_build_s": ${r3(indexBuild)}, "prewarm_ok": $prewarmOk, "prewarm_phases_s": $prewarmPhasesJson, "cache_probe": $cacheProbeJson, "total_median_s": ${r3(totalMedian)}, "total_min_s": ${r3(totalMin)}, "n_queries": ${results.size}, "probe_floor_ms": ${r3(probeFloor)}, "probe_median_ms": ${r3(probeMedian)}, "probe_max_ms": ${r3(probeMax)}, "steal_probes": $stealProbes, "n_probes": ${allProbes.size}, "par_probe_ms": $parProbesJson, "mem_probe_ms": $memProbesJson, "mem_probe_spread": ${r3(memSpread)}, "bandwidth_class": "$bandwidthClass", "mem_probe_mb_per_thread": 48, "par_probe_threads": ${Runtime.getRuntime.availableProcessors()}, "attempts": $nAttempts, "errors": $errors, "reduced_sample": $reduced},\n""",
+      s"""{\n  "_meta": {"round": "$roundTag"$roundEnvNote$confNote$heapNote$codecNote, "sf": "$sfDir", "cpus": $cpus, "init_partitions": $initPartitions, "action": "noop-write", "attempt_order": "round-robin", "index_build_s": ${r3(indexBuild)}, "prewarm_ok": $prewarmOk, "prewarm_phases_s": $prewarmPhasesJson, "cache_probe": $cacheProbeJson, "total_median_s": ${r3(totalMedian)}, "total_min_s": ${r3(totalMin)}, "n_queries": ${results.size}, "probe_floor_ms": ${r3(probeFloor)}, "probe_median_ms": ${r3(probeMedian)}, "probe_max_ms": ${r3(probeMax)}, "steal_probes": $stealProbes, "n_probes": ${allProbes.size}, "par_probe_ms": $parProbesJson, "mem_probe_ms": $memProbesJson, "mem_probe_spread": ${r3(memSpread)}, "bandwidth_class": "$bandwidthClass", "mem_probe_mb_per_thread": 48, "par_probe_threads": ${Runtime.getRuntime.availableProcessors()}, "attempts": $nAttempts, "errors": $errors, "reduced_sample": $reduced},\n""",
       ",\n", "\n}\n")
     val sideBytes = side.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     java.nio.file.Files.write(java.nio.file.Paths.get(sidePath), sideBytes)

@@ -137,7 +137,7 @@ object GraftSession {
 
   /** Effective io codec for sessions built through [[configure]];
     * throws with the conf key and allowed values on a typo (the
-    * index-ladder knob validation pattern).
+    * `Relational.confLong` validation pattern).
     */
   def sessionCodec: String = {
     val c = resolve(CodecKey, "SPARK_GRAFT_CODEC").getOrElse(DefaultCodec)

@@ -282,8 +282,9 @@ object Analytics {
     // final aggregates see ~|distinct|/parts groups each — a hash that
     // fits, no sort fallback — at the cost of exchanging raw (flag,
     // orderkey) pairs. The exchange is AQE-coalescible (no pinned
-    // partition count). Default decided by the sf30 pair in
-    // OPTIMIZATION_r20.md.
+    // partition count). Default decided by the sf30 pair
+    // bench_sf30_approxAB_map_r20.json /
+    // bench_sf30_approxAB_shuffle_r20.json.
     val distinctIn = li.select(col("l_returnflag"), col("l_orderkey"))
     val distinctPairs = spark.conf.getOption("spark.graft.approx.distinctShape")
       .getOrElse("shuffle") match {

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.Tables
 import graft.functions.TextFns._
 
@@ -234,348 +235,28 @@ object Dedup {
     * then orphaned (TrieMap.getOrElseUpdate evaluates its builder
     * non-atomically and could persist two).
     *
-    * Storage level is a MEASURED ladder, not a constant (r15). The r14
-    * sf30 leg showed why: the index set outgrows the storage half of
-    * the unified memory pool there, and memory-cached frames past that
-    * point are pure contention — execution memory is squeezed to its
-    * protected floor for EVERY query in the session (the sf30 leg's
-    * spill-onset signature). So each frame persists MEMORY_AND_DISK,
-    * is materialized eagerly, and is DEMOTED to DISK_ONLY if the
-    * session's total memory-stored bytes then exceed
-    * [[indexStorageBudget]] (the protected-storage region — what the
-    * memory manager guarantees storage may keep without starving
-    * execution). The check reads actual post-build block sizes, so no
-    * per-frame size estimate can drift. DISK_ONLY is the local
-    * analogue of the documented 100 TB posture — the index as a
-    * persisted table next to the corpus, served through the OS page
-    * cache (evictable under pressure) instead of pinned heap.
-    *
-    * The in-memory tier is SIZE-TIERED, both sides measured (r17).
-    * Blocks get LRU-displaced even when the set sits UNDER the
-    * protected region (a sweep's broadcast insertions displace index
-    * blocks — total storage stays ≥ protected, composition changes),
-    * and the two tiers fail differently under displacement:
-    * MEMORY_ONLY drops the block free of charge but silently
-    * recomputes the frame's lineage on the next read (the r16
-    * `q_dedup_exact_fp` sf30 signature — identical 19.9 MB shuffle,
-    * both attempts ~3.2 s where r15 got a cached 1.05 s; healing it
-    * with MEMORY_AND_DISK read 0.93 s), while MEMORY_AND_DISK heals
-    * from disk but pays an eviction-time WRITE of every displaced
-    * byte — measured at sf30 as a 34–44% tax on the spill-heavy
-    * queries whose memory claw does the displacing (tier A/B legs:
-    * jaccard 27.1 vs 36.4 s, simhash 57.3 vs 82.3 s). So `auto`
-    * (default) tiers by declared read count and measured size:
-    * frames read ≥2× per sweep heal (a drop there recomputes the
-    * lineage MID-QUERY — the verify reads docsets twice inside the
-    * very plan whose memory claw displaces it; measured 46.0 vs
-    * 23.0 s on the sf30 jaccard subset); once-read frames ≤
-    * `spark.graft.index.healTierMaxMB` (64) upgrade to the heal tier
-    * after measuring (eviction writes are noise at that size, the
-    * recompute is the cost); big once-read frames stay MEMORY_ONLY —
-    * dropped free under pressure, and past the headroom knee they
-    * are DISK_ONLY anyway. `spark.graft.index.cacheLevel=
-    * memory_only|memory_and_disk` forces one tier for A/B
-    * reproduction.
-    *
-    * WHICH frame demotes is a priority decision, not build order
-    * (r17). Past the knee, the r16 ladder demoted whatever happened
-    * to be under construction when the budget tripped — so the
-    * twice-read-per-query docsets arrays could land on disk (the
-    * measured ~1.4× per-unit verify tax at sf50) while the bigger,
-    * once-read shingle postings squatted in memory, and big frames
-    * built late could LRU-evict small hot frames that passed their
-    * own build-time check (the r16 `q_dedup_exact_fp` sf30 signature:
-    * identical 19.9 MB shuffle, both attempts ~3.2 s where r15 got a
-    * cached 1.05 s — the fingerprints blocks were silently gone).
-    * Now every over-budget build rebalances the whole resident set:
-    * demote FEWEST-READS-PER-SWEEP first (ties: larger frame first)
-    * until the set fits. The cost ratio makes this the principled
-    * order: demoting a frame frees `bytes` of budget and costs
-    * `reads × bytes` of disk re-reads per sweep, so cost per freed
-    * byte = reads — a once-read frame is always the cheapest way to
-    * free memory, regardless of size (the first r17 formulation
-    * ranked by bytes-per-read and measurably mis-picked: at sf50 it
-    * sent a twice-read 1.2 GB frame to disk while a once-read 1.0 GB
-    * frame stayed, paying 2.4 GB/sweep of disk reads to avoid 1.0).
-    * Ranking uses bytes CAPTURED at build (full residency), not live
-    * block sizes: LRU churn during later builds transiently deflates
-    * a frame's live bytes (measured: shingle postings read 572 of
-    * 1058 MB mid-prewarm at sf50, then healed), and a frame's
-    * steady-state cost of residency is its full size. The captured
-    * size is the MEMORY-resident portion only (r18): a heal-tier
-    * frame whose blocks overflowed to disk at build occupies no heap,
-    * so demoting it frees nothing — it must not rank by its disk
-    * footprint, and frames whose live heap bytes have since dropped
-    * to ~0 are skipped outright (a demotion is guaranteed to free
-    * budget).
-    *
-    * The fit target is `budget × (1 − headroomFraction)` (knob
-    * `spark.graft.index.headroomFraction`, default 0.35): an index
-    * set filling the protected region exactly leaves zero slack, so
-    * every heavy query's memory claw displaces index blocks and
-    * every broadcast insertion LRU-churns the set. The default is
-    * MEASURED, not assumed — the sf30 tier A/B's headroom side beat
-    * both zero-headroom sides on the spill-heavy ladder readers
-    * (jaccard 23.0 s vs 27.1 memory_only / 36.4 memory_and_disk)
-    * because preemptively demoting the once-read frames freed
-    * execution memory worth more than their residency; the sf50
-    * A/B/B2 triple showed the same negative correlation between
-    * resident bytes and wall. Demotion only fires when the set
-    * actually crosses the shrunk target, so small corpora (sf ≤ 10
-    * here) never demote regardless.
-    * `spark.graft.index.residencyPriority=off` restores build-order
-    * demotion for A/B reproduction.
+    * One storage level: a persisted frame is cached MEMORY_AND_DISK
+    * and materialized by one `count()`. Blocks that do not fit the
+    * storage pool go to local disk through Spark's block manager
+    * instead of being dropped and silently recomputed on the next
+    * read. No benchmark workload comes near filling the pool, and the
+    * only scale A/B of other levels
+    * (`bench_sf30_tierAB_{mad,memonly,madhead}_r17.json`) ran two
+    * attempts per side, its MEMORY_AND_DISK side in a window stamped
+    * `bandwidth_class: "degraded"`, so it cannot justify a per-frame
+    * selection. SCALE.md keeps the record and the way back — the index
+    * as persisted tables beside the corpus — should a workload show
+    * index/execution memory contention.
     */
-  private final class IndexHolder(build: () => DataFrame, persistFrame: Boolean,
-      label: String, readsPerSweep: Double) {
+  private final class IndexHolder(build: () => DataFrame, persistFrame: Boolean) {
     lazy val df: DataFrame = {
       val d = build()
-      // The build itself stays outside the lock (builds may overlap);
-      // only persist+measure+demote serializes (r16, closing the r15
-      // advice item): two holders materializing concurrently would
-      // otherwise each read the stored-bytes total before the other's
-      // blocks land, letting both stay MEMORY_ONLY past the budget.
-      // The lock also makes before/after RDD-id attribution sound.
-      if (persistFrame) IndexHolder.demoteLock.synchronized {
-        val spark = d.sparkSession
-        val sc = spark.sparkContext
-        val mode = spark.conf.getOption("spark.graft.index.cacheLevel")
-          .map(_.toLowerCase).getOrElse("auto")
-        // auto: a frame read MORE than once per sweep goes straight
-        // to the heal tier — its displacement risk is intra-query
-        // (the jaccard verify reads docsets twice inside one plan
-        // whose own memory claw does the displacing), and a dropped
-        // block there recomputes the whole lineage MID-QUERY, a
-        // cascade measured at 46.0 vs 23.0 s on the sf30 jaccard
-        // subset (MEMORY_ONLY vs healed two-read frames, identical
-        // resident sets). Read count is declared, so no double-build.
-        val firstLevel = mode match {
-          case "memory_and_disk" =>
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-          case "auto" if readsPerSweep >= 2.0 =>
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-          case "auto" | "memory_only" =>
-            org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-          case other => throw new IllegalArgumentException(
-            s"spark.graft.index.cacheLevel must be auto, memory_only or memory_and_disk; got '$other'")
-        }
-        val before = sc.getRDDStorageInfo.map(_.id).toSet
-        d.persist(firstLevel)
+      if (persistFrame) {
+        d.persist(StorageLevel.MEMORY_AND_DISK)
         d.count()
-        var own = sc.getRDDStorageInfo.filterNot(i => before.contains(i.id))
-        val ownBytes = own.map(i => i.memSize + i.diskSize).sum
-        // Partial residency (MEMORY_ONLY tiers): blocks that did not
-        // fit were silently dropped — the frame cannot fit even
-        // alone, so it goes straight to DISK_ONLY (r16 rule). Under
-        // MEMORY_AND_DISK the overflow sits disk-backed instead and
-        // is only logged.
-        val partial = firstLevel.useMemory && !firstLevel.useDisk &&
-          own.exists(i => i.numCachedPartitions < i.numPartitions)
-        if (partial) {
-          System.err.println(
-            f"[graft-index] DISK_ONLY demotion (partial-residency): frame=$label ownMem=${ownBytes / 1e6}%.1f MB")
-          d.unpersist(blocking = true)
-          d.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-          d.count()
-        } else {
-          val ownDisk = own.map(_.diskSize).sum
-          if (ownDisk > 0) System.err.println(
-            f"[graft-index] build overflow to disk: frame=$label mem=${own.map(_.memSize).sum / 1e6}%.1f MB disk=${ownDisk / 1e6}%.1f MB")
-          // auto tier, once-read frames: small ones upgrade to the
-          // heal path after measuring (their eviction writes are
-          // negligible and their per-displacement recompute is the
-          // real cost — the exact_fp signature); big once-read frames
-          // stay MEMORY_ONLY so a heavy query's memory claw drops
-          // them for free instead of writing GBs mid-query (the
-          // measured sf30 tier A/B: jaccard 27.1 vs 36.4 s, simhash
-          // 57.3 vs 82.3 s, memory_only vs memory_and_disk
-          // everywhere) — and past the headroom knee they demote to
-          // DISK_ONLY anyway. The upgrade recompute is charged once
-          // to index_build and is by construction a ≤healTierMaxMB
-          // frame's build.
-          val healMax = IndexHolder.confLong(spark,
-            "spark.graft.index.healTierMaxMB", 64L, min = 0L) << 20
-          if (mode == "auto" && readsPerSweep < 2.0 && ownBytes <= healMax) {
-            d.unpersist(blocking = true)
-            val before2 = sc.getRDDStorageInfo.map(_.id).toSet
-            d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            d.count()
-            own = sc.getRDDStorageInfo.filterNot(i => before2.contains(i.id))
-            System.err.println(
-              f"[graft-index] heal-tier upgrade (MEMORY_AND_DISK): frame=$label bytes=${ownBytes / 1e6}%.1f MB")
-          }
-          IndexHolder.residents += IndexHolder.Resident(label, readsPerSweep,
-            d, own.map(_.id).toSet, ownBytes, own.map(_.memSize).sum)
-          IndexHolder.rebalance(spark, trigger = label)
-        }
       }
       d
     }
-  }
-
-  /** Pure victim pick for the over-budget rebalance: the INDEX of the
-    * frame whose demotion frees budget at the lowest disk-read cost.
-    * Demoting frees `bytes` and costs `reads × bytes` of DISK_ONLY
-    * re-reads per sweep — cost per freed byte = reads — so the order
-    * is fewest reads first; among equal read counts, the LARGER frame
-    * first (same cost ratio, frees more per demotion, fewer frames
-    * end up on disk); remaining ties break toward the LATER frame
-    * (degenerates to the build-order rule when priorities cannot
-    * decide). Input tuples are (label, build-time captured
-    * MEMORY-RESIDENT bytes, declared post-build reads per sweep), in
-    * build order. Memory-resident (memSize) rather than mem+disk
-    * (r18, advice fix): the rebalance loop's exit condition counts
-    * heap bytes only, and a MEMORY_AND_DISK frame whose blocks
-    * largely overflowed to disk at build would otherwise rank as
-    * large, get picked, and free almost nothing — its unpersist also
-    * drops the disk blocks, forcing a full lineage recompute for zero
-    * budget gained.
-    */
-  private[graft] def demotionVictim(frames: Seq[(String, Long, Double)]): Int =
-    frames.zipWithIndex.minBy { case ((_, bytes, reads), i) =>
-      (reads, -bytes, -i)
-    }._2
-
-  private[graft] object IndexHolder {
-    val demoteLock = new Object
-
-
-    /** A memory-tier-resident index frame: the RDD ids its cached
-      * blocks live under and its build-time measured bytes (full
-      * residency — the stable ranking size; live block sizes churn
-      * under LRU mid-prewarm). `bytes` is mem+disk as captured at
-      * build (logging / cost bookkeeping); `memBytes` is the
-      * memory-resident portion only — the ranking size, because a
-      * demotion can only ever free heap (r18 advice fix: a
-      * MEMORY_AND_DISK frame that overflowed to disk at build must
-      * not rank by its disk footprint).
-      */
-    final case class Resident(label: String, readsPerSweep: Double,
-        df: DataFrame, rddIds: Set[Int], bytes: Long, memBytes: Long)
-
-    /** Validated long knob: names the conf key on a malformed or
-      * out-of-range value instead of surfacing a bare
-      * NumberFormatException (same contract as the resample fanOut
-      * knob, `Relational.scala`).
-      */
-    def confLong(spark: SparkSession, key: String, default: Long,
-        min: Long): Long =
-      spark.conf.getOption(key).map { v =>
-        val n = try v.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$key must be an integer; got '$v'")
-        }
-        if (n < min) throw new IllegalArgumentException(
-          s"$key must be >= $min; got '$v'")
-        n
-      }.getOrElse(default)
-
-    /** Validated headroom knob: must parse as a double in [0, 1) —
-      * a fraction >= 1 makes the fit target <= 0 and would demote the
-      * ENTIRE resident set, multi-read verify frames included.
-      */
-    def confHeadroom(spark: SparkSession): Double =
-      spark.conf.getOption("spark.graft.index.headroomFraction").map { v =>
-        val h = try v.toDouble catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"spark.graft.index.headroomFraction must be a number in [0, 1); got '$v'")
-        }
-        if (h < 0.0 || h >= 1.0 || h.isNaN) throw new IllegalArgumentException(
-          s"spark.graft.index.headroomFraction must be in [0, 1); got '$v'")
-        h
-      }.getOrElse(0.35)
-
-    /** All MEMORY_ONLY frames, every session. Guarded by
-      * [[demoteLock]]; stopped-session entries are swept on rebalance.
-      */
-    val residents = scala.collection.mutable.ArrayBuffer.empty[Resident]
-
-    /** Demote resident frames of `spark`'s context — fewest reads
-      * per sweep first, larger first among equals — until the
-      * session's stored heap bytes fit the headroom-adjusted
-      * [[indexStorageBudget]]. Called under [[demoteLock]] after each
-      * build. A demotion recomputes the victim's lineage once
-      * (unpersist drops its blocks before the DISK_ONLY write);
-      * prewarm charges that to `index_build`, which is the honest
-      * place — the 100 TB analogue is writing the index table out
-      * next to the corpus.
-      */
-    def rebalance(spark: SparkSession, trigger: String): Unit = {
-      val sc = spark.sparkContext
-      residents.filterInPlace(r => !r.df.sparkSession.sparkContext.isStopped)
-      val priorityOn = spark.conf.getOption("spark.graft.index.residencyPriority")
-        .forall(_ != "off")
-      val headroom = confHeadroom(spark)
-      val target = (indexStorageBudget(spark) * (1.0 - headroom)).toLong
-      var guard = residents.size + 1
-      while (guard > 0) {
-        guard -= 1
-        val infos = sc.getRDDStorageInfo
-        val stored = infos.map(_.memSize).sum
-        if (stored <= target) return
-        // Candidates must actually free heap when demoted: a frame
-        // whose blocks live (almost) entirely on disk — MEMORY_AND_DISK
-        // build overflow, or full LRU displacement since build — frees
-        // ~nothing, and its unpersist drops the disk copy too, forcing
-        // a full lineage recompute for zero budget gained (r18 advice
-        // fix). Gate on CURRENT live memSize so the guarantee holds at
-        // decision time, not just at build time.
-        val liveMem = infos.map(i => i.id -> i.memSize).toMap
-        val mine = residents.filter(r =>
-          (r.df.sparkSession.sparkContext eq sc) &&
-            r.rddIds.iterator.map(liveMem.getOrElse(_, 0L)).sum > (1L << 20))
-        if (mine.isEmpty) return
-        // Build-order mode (A side): the newest frame — the one whose
-        // arrival tripped the budget — demotes, exactly the r16 rule.
-        val victim =
-          if (priorityOn)
-            mine(demotionVictim(
-              mine.map(r => (r.label, r.memBytes, r.readsPerSweep)).toSeq))
-          else mine.last
-        System.err.println(
-          f"[graft-index] DISK_ONLY demotion (over-budget, trigger=$trigger, mode=${if (priorityOn) "priority" else "build-order"}): frame=${victim.label} reads=${victim.readsPerSweep}%.0f builtMem=${victim.memBytes / 1e6}%.1f MB builtTotal=${victim.bytes / 1e6}%.1f MB storedTotal=${stored / 1e6}%.1f MB target=${target / 1e6}%.1f MB")
-        victim.df.unpersist(blocking = true)
-        victim.df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        victim.df.count()
-        residents -= victim
-      }
-    }
-  }
-
-  /** Bytes the persisted index set may keep ON-HEAP before new frames
-    * demote to disk: the PROTECTED storage region of Spark's unified
-    * memory manager — (heap − 300 MB reserved) × spark.memory.fraction
-    * × spark.memory.storageFraction. Below it, cached frames coexist
-    * with execution at zero cost (execution cannot evict them, but
-    * never needs to); past it, every additional cached byte is taken
-    * FROM execution's evictable half, which is exactly the r14 sf30
-    * pathology.
-    *
-    * Heap base (r16, closing the r15 advice item): getRDDStorageInfo
-    * aggregates cached bytes across ALL executors, so the budget must
-    * be cluster-wide to compare like with like. In local mode the one
-    * JVM is the whole cluster — its own maxMemory is exact. On a real
-    * cluster the base is spark.executor.memory × live executor count
-    * (driver excluded), re-read per call so dynamic allocation growth
-    * raises the budget with the fleet.
-    */
-  private[graft] def indexStorageBudget(spark: SparkSession): Long = {
-    val sc = spark.sparkContext
-    val heapBytes: Long =
-      if (sc.isLocal) Runtime.getRuntime.maxMemory
-      else {
-        val perExec = spark.conf.getOption("spark.executor.memory")
-          .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-          .getOrElse(1L << 30) // Spark's own executor-memory default
-        val execs = math.max(1, sc.statusTracker.getExecutorInfos.length - 1)
-        perExec * execs
-      }
-    val usable = heapBytes - (300L << 20)
-    val fraction = spark.conf.getOption("spark.memory.fraction")
-      .map(_.toDouble).getOrElse(0.6)
-    val storageFraction = spark.conf.getOption("spark.memory.storageFraction")
-      .map(_.toDouble).getOrElse(0.5)
-    (usable * fraction * storageFraction).toLong
   }
 
   private type IndexCache =
@@ -602,12 +283,7 @@ object Dedup {
     * re-md5ing the corpus text per invocation.
     */
   def fingerprints(spark: SparkSession, sfDir: String): DataFrame =
-    // readsPerSweep: q_dedup_exact_fp + the incremental admission join
-    // + the funnel's group count — 3 post-build consumer reads, over a
-    // tiny 16 B/row frame, so priority demotion keeps it resident
-    // essentially forever (the r16 sf30 eviction regression's fix).
-    memoized(fpCache, spark, sfDir, label = "fingerprints",
-        readsPerSweep = 3.0) {
+    memoized(fpCache, spark, sfDir) {
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), hash60(col("text")).as("fp60"))
     }
@@ -637,13 +313,11 @@ object Dedup {
     * unpersist call is needed or possible).
     */
   private def memoized(cache: IndexCache, spark: SparkSession, sfDir: String,
-      persistFrame: Boolean = true, label: String = "index",
-      readsPerSweep: Double = 1.0)(
-      build: => DataFrame): DataFrame = {
+      persistFrame: Boolean = true)(build: => DataFrame): DataFrame = {
     allCaches.synchronized(allCaches.toList).foreach { c =>
       c.keySet.foreach { k => if (k._1.sparkContext.isStopped) c.remove(k) }
     }
-    val holder = new IndexHolder(() => build, persistFrame, label, readsPerSweep)
+    val holder = new IndexHolder(() => build, persistFrame)
     cache.putIfAbsent((spark, sfDir), holder).getOrElse(holder).df
   }
 
@@ -684,12 +358,7 @@ object Dedup {
     * persisted inverted-index table the text-dedup family reads.
     */
   def shingleIndex(spark: SparkSession, sfDir: String): DataFrame =
-    // readsPerSweep: post-build this big postings frame is read once
-    // (boilerplate coverage); jaccard reads the ranked prefix index
-    // instead, and the prefix build's own read is sunk at index time.
-    // One read over the largest frame in the set → first to disk.
-    memoized(shingleIndexCache, spark, sfDir, label = "shingle_index",
-        readsPerSweep = 1.0) {
+    memoized(shingleIndexCache, spark, sfDir) {
       shingleIndexOf(Tables.documents(spark, sfDir))
     }
 
@@ -844,11 +513,7 @@ object Dedup {
     * [[prewarmTimed]].
     */
   def jaccardPrefixIndex(spark: SparkSession, sfDir: String): DataFrame =
-    // readsPerSweep: the jaccard candidate self-join reads the ranked
-    // frame twice (both sides of the prefix join); the docsets build
-    // read is sunk at index time.
-    memoized(prefixCache, spark, sfDir, label = "jaccard_prefix",
-        readsPerSweep = 2.0) {
+    memoized(prefixCache, spark, sfDir) {
       rankedOf(shingleIndex(spark, sfDir), Some(MaxShingleDf))
     }
 
@@ -934,10 +599,9 @@ object Dedup {
     * the arrays TWICE (a-side and b-side) and a zero-exchange
     * aggregate re-executes per consumer (4.6 GB of sort-fallback
     * spill per execution at sf30) — the persisted frame materializes
-    * them once per (session, corpus), and the r15 storage ladder
-    * demotes it to disk if it tips the cached set past the protected
-    * budget. At cluster scale this is the third table of the dedup
-    * index family (postings, prefix ranks, arrays).
+    * them once per (session, corpus). At cluster scale this is the
+    * third table of the dedup index family (postings, prefix ranks,
+    * arrays).
     *
     * Built at [[verifyBuildParts]]' counted width (r16): the verify
     * SHJ builds its hash relation from these cached blocks AS
@@ -951,12 +615,7 @@ object Dedup {
     * stream follows to the same width through ENSURE_REQUIREMENTS.
     */
   def jaccardDocsets(spark: SparkSession, sfDir: String): DataFrame =
-    // readsPerSweep: the verify joins consume docsets TWICE per
-    // jaccard run (a-side and b-side) — the frame whose demotion the
-    // sf50 leg measured as the ~1.4× per-unit verify tax; priority
-    // demotion exists to keep exactly this frame resident.
-    memoized(docsetsCache, spark, sfDir, label = "jaccard_docsets",
-        readsPerSweep = 2.0) {
+    memoized(docsetsCache, spark, sfDir) {
       val d = docsetsOf(jaccardPrefixIndex(spark, sfDir))
       val parts = verifyBuildParts(spark, documentCount(spark, sfDir))
       if (parts > spark.sessionState.conf.numShufflePartitions)
@@ -1120,10 +779,7 @@ object Dedup {
     * keeps alongside the documents.
     */
   def minHashSignatures(spark: SparkSession, sfDir: String): DataFrame =
-    // readsPerSweep: post-build reads = the incremental C-tier slice;
-    // the pairs build's read is sunk at index time.
-    memoized(sigCache, spark, sfDir, label = "minhash_signatures",
-        readsPerSweep = 1.0) {
+    memoized(sigCache, spark, sfDir) {
       minHashSignaturesOf(Tables.documents(spark, sfDir))
     }
 
@@ -1142,10 +798,7 @@ object Dedup {
     * for semantics, [[pairCache]] for the caching contract).
     */
   def minHashPairs(spark: SparkSession, sfDir: String): DataFrame =
-    // readsPerSweep: q_dedup_minhash + q_dedup_verified + the funnel's
-    // pair count — 3 post-build reads (the clusters build is sunk).
-    memoized(pairCache, spark, sfDir, label = "lsh_pairs",
-        readsPerSweep = 3.0) {
+    memoized(pairCache, spark, sfDir) {
       val sig = minHashSignatures(spark, sfDir)
       // (doc_id, band, bucket) — one row per band via posexplode of the
       // 4 band keys, each key an md5 over that band's slots.
@@ -1434,11 +1087,7 @@ object Dedup {
   private val clusterCache = newCache()
 
   def nearDupClusters(spark: SparkSession, sfDir: String): DataFrame =
-    // readsPerSweep: q_dedup_cluster + best_keep + incremental's
-    // membership read + the funnel's cluster stats — 4 post-build
-    // reads.
-    memoized(clusterCache, spark, sfDir, label = "clusters",
-        readsPerSweep = 4.0) {
+    memoized(clusterCache, spark, sfDir) {
       buildNearDupClusters(spark, sfDir)
     }
 
@@ -1573,7 +1222,7 @@ object Dedup {
     * (session, corpus) instead of accumulating a new set of cached
     * blocks per call until the ContextCleaner happens to run.
     */
-  private def batchSignatures(spark: SparkSession, sfDir: String): DataFrame =
+  private[graft] def batchSignatures(spark: SparkSession, sfDir: String): DataFrame =
     memoized(batchSigCache, spark, sfDir, persistFrame = false) {
       minHashSignaturesOf(
         Tables.documents(spark, sfDir).filter(col("doc_id") >= 250))
@@ -1731,16 +1380,6 @@ object Dedup {
     // q_dedup_incremental measure the same (post-build) plan and the
     // O(|batch|) hash cost lands in `index_build` with its peers.
     phase("batch_signatures")(batchSignatures(spark, sfDir).count())
-    // One leg-record line naming the post-prewarm resident set — the
-    // demote log names what LEFT memory; this names what stayed, so a
-    // rung's ladder state is reconstructible without a demotion.
-    IndexHolder.demoteLock.synchronized {
-      val mine = IndexHolder.residents
-        .filter(_.df.sparkSession.sparkContext eq spark.sparkContext)
-      val stored = spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
-      System.err.println(
-        f"[graft-index] resident after prewarm: ${mine.map(r => f"${r.label}=${r.bytes / 1e6}%.1f MB(x${r.readsPerSweep}%.0f)").mkString(", ")} storedMem=${stored / 1e6}%.1f MB budget=${indexStorageBudget(spark) / 1e6}%.1f MB")
-    }
     out.toSeq
   }
 

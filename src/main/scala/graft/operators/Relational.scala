@@ -383,16 +383,32 @@ object Relational {
     * constraint. A 1000-executor deployment (32k cores) should raise
     * the cap toward `cores × 2-3` so the counted width can breathe;
     * the default stays at the measured single-node knee. Validated
-    * like the index-ladder knobs: errors name the conf key, min 1.
+    * by [[confLong]]: errors name the conf key, min 1.
     */
   private[graft] def sortFanOut(spark: SparkSession, rows: Long, bytesPerRow: Long): Int = {
     val default = spark.sessionState.conf.numShufflePartitions
     val cap = math.min(
-      Dedup.IndexHolder.confLong(spark, "spark.graft.sort.fanOutCap", 1024L, min = 1L),
+      confLong(spark, "spark.graft.sort.fanOutCap", 1024L, min = 1L),
       Int.MaxValue.toLong)
     val need = (rows * bytesPerRow + TargetSortBytesPerTask - 1) / TargetSortBytesPerTask
     math.min(cap, math.max(default.toLong, need)).toInt
   }
+
+  /** Validated long knob: names the conf key on a malformed or
+    * out-of-range value instead of surfacing a bare
+    * NumberFormatException.
+    */
+  private[graft] def confLong(spark: SparkSession, key: String, default: Long,
+      min: Long): Long =
+    spark.conf.getOption(key).map { v =>
+      val n = try v.toLong catch {
+        case _: NumberFormatException => throw new IllegalArgumentException(
+          s"$key must be an integer; got '$v'")
+      }
+      if (n < min) throw new IllegalArgumentException(
+        s"$key must be >= $min; got '$v'")
+      n
+    }.getOrElse(default)
 
   /** Memoized row count of the resample union frame (grid + hourly) —
     * the sizing input of its counted sort fan-out. One counting pass
@@ -496,8 +512,8 @@ object Relational {
     // counted 344 reads 53.4 s (0 spill): +30% wall to erase disk
     // traffic nothing was waiting on — the same wide-fan-out
     // bookkeeping cost that rejected the r10 initialPartitionNum
-    // lever and the r16 mart factParts knob. The knob reproduces all
-    // four regimes under the exact bench harness.
+    // lever and the r16 mart fact-exchange widening. The knob
+    // reproduces all four regimes under the exact bench harness.
     val fanOutMode = spark.conf.getOption("spark.graft.resample.fanOut")
       .getOrElse("off")
     // An explicit integer pins the width, but only widths ABOVE the

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.operators.VendasMart
+
 /** The reference's silver→gold "vendas" mart on the *actual Olist
   * schemas* (`scripts/silver_to_gold/ingestion_vendas_silver_to_gold.py`)
   * — the literal port, exercised end-to-end by OlistPipelineSpec over
@@ -75,11 +77,18 @@ object OlistVendas {
     * layout applied to the production entry point. The repartition
     * puts each bucket in one file (see the VendasMart scaladoc for the
     * sort-elision contract). Returns the catalog table names.
+    *
+    * A location left by an earlier JVM has no catalog entry, and
+    * `saveAsTable(overwrite)` refuses it with LOCATION_ALREADY_EXISTS,
+    * so such orphans are cleared first — the same guard as
+    * [[graft.operators.VendasMart.bucketedSilver]].
     */
   def bucketedSilver(spark: SparkSession, silverRoot: String,
       nBuckets: Int): (String, String) = {
     val itemsT = "olist_silver_items_b"
     val ordersT = "olist_silver_orders_b"
+    VendasMart.clearStaleLocation(spark, itemsT)
+    VendasMart.clearStaleLocation(spark, ordersT)
     silver(spark, silverRoot, OlistCatalog.orderItems)
       .select("order_id", "product_id", "price", "freight_value")
       .repartition(nBuckets, col("order_id"))

@@ -3,14 +3,14 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Dev-only per-frame attribution of the persisted dedup-index
-  * footprint — the sizing input of the round-15 storage-level ladder.
+  * footprint.
   *
   * Bench's `cache_probe.sweep_mb` totals the whole persisted set
   * (1,566 MB at sf10, 4,691 MB at sf30 — exactly linear at
   * ~3.13 KB/doc); this walks the SAME build order as
   * [[graft.operators.Dedup.prewarmTimed]] and prints the STORAGE
-  * DELTA each phase adds, so the ladder's per-frame constants are
-  * measured, not guessed:
+  * DELTA each phase adds, so per-frame sizes are measured, not
+  * guessed:
   *
   *   SPARK_GRAFT_SF_DIR=/tmp/graft_sf10 tools/run_bench.sh \
   *     graft.tools.CacheSizes

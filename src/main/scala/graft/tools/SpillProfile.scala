@@ -76,7 +76,7 @@ object SpillProfile {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Generic runtime-conf pass-through for A/B knobs the operators
-    // read via spark.conf (e.g. spark.graft.mart.factParts):
+    // read via spark.conf (e.g. spark.graft.mart.dimBroadcast):
     //   SPARK_GRAFT_CONF="k1=v1;k2=v2"
     sys.env.get("SPARK_GRAFT_CONF").foreach { kvs =>
       kvs.split(';').filter(_.nonEmpty).foreach { kv =>

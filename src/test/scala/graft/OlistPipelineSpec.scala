@@ -2,9 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types.DateType
 
-import graft.sources.{IngestJob, OlistVendas}
+import graft.sources.{IngestJob, OlistCatalog, OlistVendas}
 
 /** End-to-end golden pipeline test (SURVEY.md §5.3): bronze CSVs for
   * all 8 Olist tables → IngestJob.runAll → OlistVendas silver→gold →
@@ -20,11 +21,9 @@ class OlistPipelineSpec extends SparkSpec {
     Files.writeString(p, lines.mkString("\n"))
   }
 
-  test("full b2s + s2g pipeline produces the reference vendas mart") {
-    val bronze = tmpDir("bronze")
-    val silver = tmpDir("silver")
-    val gold = tmpDir("gold")
-
+  /** The shared bronze fixture: all 8 Olist tables, three items over
+    * two orders, plus an order with no items. */
+  private def writeBronze(bronze: String): Unit = {
     writeCsv(bronze, "olist/customers",
       "customer_id,customer_unique_id,customer_zip_code_prefix,customer_city,customer_state",
       "c1,u1,01310,sao paulo,SP",
@@ -62,7 +61,14 @@ class OlistPipelineSpec extends SparkSpec {
       "review_id,order_id,review_score,review_comment_title,review_comment_message," +
         "review_creation_date,review_answer_timestamp",
       "r1,o1,5,,otimo,2017-10-11 00:00:00,2017-10-12 03:43:48")
+  }
 
+  test("full b2s + s2g pipeline produces the reference vendas mart") {
+    val bronze = tmpDir("bronze")
+    val silver = tmpDir("silver")
+    val gold = tmpDir("gold")
+
+    writeBronze(bronze)
     IngestJob.runAll(spark, bronze, silver)
     OlistVendas.run(spark, silver, gold)
 
@@ -90,6 +96,35 @@ class OlistPipelineSpec extends SparkSpec {
     val o2 = rows(2)
     assert(o2.getAs[Double]("VALOR_BOLETO") == 59.90)
     assert(o2.getAs[String]("CIDADE_CLIENTE") == "RIO DE JANEIRO")
+  }
+
+  test("bucketed gold build replaces a stale silver location that has no catalog entry") {
+    val bronze = tmpDir("bronze_stale")
+    val silver = tmpDir("silver_stale")
+    val gold = tmpDir("gold_stale")
+    writeBronze(bronze)
+    IngestJob.runAll(spark, bronze, silver)
+
+    // What an earlier JVM leaves behind: the bucketed tables' warehouse
+    // directories on disk, unknown to this session's catalog.
+    val itemsT = "olist_silver_items_b"
+    val ordersT = "olist_silver_orders_b"
+    val wh = new Path(spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (t <- Seq(itemsT, ordersT)) {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val out = fs.create(new Path(new Path(wh, t), "part-00000-stray.parquet"), true)
+      try out.write("not parquet".getBytes("UTF-8")) finally out.close()
+      assert(!spark.catalog.tableExists(t))
+    }
+
+    OlistVendas.run(spark, silver, gold, buckets = Some(2))
+
+    assert(spark.table(itemsT).count() ==
+      OlistVendas.silver(spark, silver, OlistCatalog.orderItems).count())
+    assert(spark.table(ordersT).count() ==
+      OlistVendas.silver(spark, silver, OlistCatalog.orders).count())
+    assert(spark.read.parquet(s"$gold/olist/vendas").count() == 3)
   }
 
   test("incremental streaming mart appends exactly the batch mart rows") {

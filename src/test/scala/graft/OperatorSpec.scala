@@ -1157,75 +1157,12 @@ class OperatorSpec extends SparkSpec {
     assert(Dedup.verifyBuildParts(big, 100L) == 8192)
   }
 
-  test("index residency priority: demote fewest-reads-first, larger-first among equals") {
-    // The r17 lever's decision kernel: demoting frees `bytes` and
-    // costs `reads × bytes` of disk re-reads per sweep, so cost per
-    // freed byte = reads. Since r18 the byte input is the build-time
-    // MEMORY-resident size (heap the demotion actually frees); at the
-    // measured sf50 frame shape every frame was fully memory-resident
-    // at build, so the pinned tuples are unchanged. Frames in build
-    // order: once-read postings built BEFORE the twice-read prefix
-    // and docsets frames and alongside the tiny thrice-read
-    // fingerprints.
-    val frames = Seq(
-      ("fingerprints", 40L << 20, 3.0),
-      ("shingle_index", 1058L << 20, 1.0),   // 1 read — cheapest per freed byte
-      ("jaccard_prefix", 1244L << 20, 2.0),
-      ("jaccard_docsets", 1108L << 20, 2.0),
-      ("minhash_signatures", 417L << 20, 1.0))
-    // Build-order demotion would evict the newest; reads-ascending
-    // picks the LARGER once-read frame, keeping both two-read verify
-    // frames (the measured sf50 mis-pick of the bytes-per-read
-    // formulation: 2.4 GB/sweep of disk reads to avoid 1.0).
-    assert(frames(Dedup.demotionVictim(frames))._1 == "shingle_index")
-    // Next victim among the rest: the remaining once-read frame,
-    // never the twice-read verify frames or the tiny hot frame.
-    val rest = frames.filterNot(_._1 == "shingle_index")
-    assert(rest(Dedup.demotionVictim(rest))._1 == "minhash_signatures")
-    // Equal reads: larger frame first (same cost ratio, fewer
-    // demotions); full ties break toward the NEWEST frame —
-    // degenerates to the r16 build-order rule.
-    val equalReads = Seq(("a", 200L, 1.0), ("b", 300L, 1.0), ("c", 250L, 1.0))
-    assert(Dedup.demotionVictim(equalReads) == 1)
-    val tied = Seq(("a", 100L, 1.0), ("b", 100L, 1.0), ("c", 100L, 1.0))
-    assert(Dedup.demotionVictim(tied) == 2)
-  }
-
-  test("index ladder knobs: validated, conf key named on bad values") {
-    // r18 advice fix: headroomFraction/healTierMaxMB used to parse
-    // with bare .toDouble/.toLong (opaque NumberFormatException), and
-    // an unvalidated headroom >= 1.0 makes the fit target <= 0 —
-    // demoting the ENTIRE resident set including multi-read frames.
-    val s = spark.newSession()
-    assert(Dedup.IndexHolder.confHeadroom(s) == 0.35) // measured default
-    s.conf.set("spark.graft.index.headroomFraction", "0.2")
-    assert(Dedup.IndexHolder.confHeadroom(s) == 0.2)
-    s.conf.set("spark.graft.index.headroomFraction", "0")
-    assert(Dedup.IndexHolder.confHeadroom(s) == 0.0) // A/B repro value
-    for (bad <- Seq("1.0", "1.5", "-0.1", "NaN", "lots")) {
-      s.conf.set("spark.graft.index.headroomFraction", bad)
-      val e = intercept[IllegalArgumentException](Dedup.IndexHolder.confHeadroom(s))
-      assert(e.getMessage.contains("spark.graft.index.headroomFraction"))
-    }
-    assert(Dedup.IndexHolder.confLong(s,
-      "spark.graft.index.healTierMaxMB", 64L, min = 0L) == 64L)
-    s.conf.set("spark.graft.index.healTierMaxMB", "128")
-    assert(Dedup.IndexHolder.confLong(s,
-      "spark.graft.index.healTierMaxMB", 64L, min = 0L) == 128L)
-    for (bad <- Seq("-1", "many")) {
-      s.conf.set("spark.graft.index.healTierMaxMB", bad)
-      val e = intercept[IllegalArgumentException](Dedup.IndexHolder.confLong(s,
-        "spark.graft.index.healTierMaxMB", 64L, min = 0L))
-      assert(e.getMessage.contains("spark.graft.index.healTierMaxMB"))
-    }
-  }
-
   test("sortFanOut cap is a validated conf; counted width honors it") {
     // r18: the sf100 fanOut A/B showed the counted 64 MB/task width
     // wants ~6,500 partitions at 10.5 B grid rows while the 1024 cap
     // (the measured single-node knee) binds — the right cap is a
-    // cluster property, so it is a conf, validated like the ladder
-    // knobs.
+    // cluster property, so it is a conf, validated by
+    // Relational.confLong.
     val s = spark.newSession()
     val default = s.sessionState.conf.numShufflePartitions
     // Small frame: stays at the session default (plan unchanged).

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.storage.StorageLevel
+
 import graft.operators.Dedup
 import graft.tools.StageMetricsListener
 
@@ -13,7 +17,8 @@ import graft.tools.StageMetricsListener
   * `Dedup.shingleIndexOf`) with ~4x headroom for codec/framing
   * overhead. Budgets are calibrated at sf0.01 (500 docs, ~250 KB of
   * text): a body-shuffle regression overshoots them by an order of
-  * magnitude, while noise stays well inside.
+  * magnitude, while noise stays well inside. The prewarmed index's
+  * storage contract is pinned here too, on the same corpus.
   */
 class ShuffleBudgetSpec extends SparkSpec {
 
@@ -69,5 +74,30 @@ class ShuffleBudgetSpec extends SparkSpec {
     // reread of the cached fragment moves, no corpus re-hash.
     assert(bytes < 256 * 1024,
       s"q_dedup_minhash shuffled $bytes B off a prewarmed index")
+  }
+
+  test("prewarmed index frames persist once at MEMORY_AND_DISK and are served cached") {
+    Dedup.prewarm(spark, sf)
+    val frames = Seq[(String, (SparkSession, String) => DataFrame)](
+      "fingerprints" -> Dedup.fingerprints,
+      "shingle_index" -> Dedup.shingleIndex,
+      "jaccard_prefix" -> Dedup.jaccardPrefixIndex,
+      "jaccard_docsets" -> Dedup.jaccardDocsets,
+      "minhash_signatures" -> Dedup.minHashSignatures,
+      "lsh_pairs" -> Dedup.minHashPairs,
+      "clusters" -> Dedup.nearDupClusters)
+    for ((name, frame) <- frames) {
+      val first = frame(spark, sf)
+      assert(first.storageLevel == StorageLevel.MEMORY_AND_DISK,
+        s"$name persisted at ${first.storageLevel}")
+      // A second accessor call is a memo hit: the same frame, whose
+      // plan is the cached relation rather than a fresh lineage.
+      val again = frame(spark, sf)
+      assert(again eq first, s"$name rebuilt on the second call")
+      assert(again.queryExecution.withCachedData.isInstanceOf[InMemoryRelation],
+        s"$name not served from the cache:\n${again.queryExecution.withCachedData}")
+    }
+    // The batch signatures are a localCheckpoint, never persisted.
+    assert(Dedup.batchSignatures(spark, sf).storageLevel == StorageLevel.NONE)
   }
 }
