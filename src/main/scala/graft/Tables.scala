@@ -1,6 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.StructType
 
 /** Catalog of the harness star-schema tables (see TESTDATA.md /
   * FIXTURES.md §A). One parquet file per table under `sfDir`.
@@ -10,15 +15,60 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `scripts/bronze_to_silver/ingestion_customer_bronze_to_silver.py:74-78`);
   * here the scale-factor directory plays the role of the silver bucket.
   *
-  * Scans stay lazy `spark.read.parquet` handles — Catalyst prunes columns
-  * and pushes predicates into the vectorized parquet reader, so callers
-  * should `.select`/`.filter` directly on these frames rather than
+  * Scans stay lazy parquet handles — Catalyst prunes columns and pushes
+  * predicates into the vectorized parquet reader, so callers should
+  * `.select`/`.filter` directly on these frames rather than
   * materializing them. At cluster scale the same accessors work on
   * `s3a://` paths unchanged.
+  *
+  * Each path's schema is inferred once, not on every read: a plain
+  * `spark.read.parquet` starts a footer-reading Spark job per call
+  * (`mergeSchemasInParallel`, one task even for one file). The inferred
+  * `StructType` is memoized per path and later reads pass it with
+  * `spark.read.schema`, which starts no job. An entry holds only while
+  * the path's files (path, length, mtime, taken from the file index the
+  * read builds anyway) and the confs that steer Parquet schema inference
+  * are unchanged; otherwise the read infers again and replaces it. Every
+  * call still builds a fresh relation, so a self-join never shares one
+  * plan instance.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+
+  /** The session confs that change what Parquet schema inference returns. */
+  private val InferenceConfs = Seq(
+    GraftSession.NanosAsLong,
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private final case class Inferred(
+      files: Seq[(String, Long, Long)], confs: Seq[String], schema: StructType)
+
+  private val inferred = new ConcurrentHashMap[String, Inferred]()
+
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val confs = InferenceConfs.map(k => spark.conf.get(k))
+    val hit = Option(inferred.get(path)).filter(_.confs == confs).flatMap { e =>
+      val df = spark.read.schema(e.schema).parquet(path)
+      if (filesOf(df).contains(e.files)) Some(df) else None
+    }
+    hit.getOrElse {
+      val df = spark.read.parquet(path)
+      filesOf(df).foreach(f => inferred.put(path, Inferred(f, confs, df.schema)))
+      df
+    }
+  }
+
+  /** (path, length, mtime) of every file behind a parquet read, from the
+    * file index Spark listed for it — no further file-system call. */
+  private def filesOf(df: DataFrame): Option[Seq[(String, Long, Long)]] =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
+    }.collect { case index: PartitioningAwareFileIndex =>
+      index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+    }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "orders")

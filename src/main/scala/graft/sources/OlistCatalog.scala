@@ -21,7 +21,14 @@ final case class TableSpec(
     name: String,
     prefix: String,
     schema: StructType,
-    tsCols: Seq[String] = Nil)
+    tsCols: Seq[String] = Nil) {
+
+  /** The schema [[IngestJob]] writes to silver: `schema` with `tsCols`
+    * as TimestampType. Silver readers declare it instead of inferring
+    * it from Parquet footers (IngestSpec pins the two equal). */
+  def silverSchema: StructType = StructType(schema.fields.map(f =>
+    if (tsCols.contains(f.name)) f.copy(dataType = TimestampType) else f))
+}
 
 object OlistCatalog {
 

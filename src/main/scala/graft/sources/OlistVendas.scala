@@ -37,8 +37,10 @@ object OlistVendas {
   val MoneyCols: Seq[String] =
     Seq("price", "freight_value") ++ PaymentTypes
 
+  /** A silver table read with its declared [[TableSpec.silverSchema]],
+    * so no Spark job infers it from the Parquet footers. */
   def silver(spark: SparkSession, silverRoot: String, spec: TableSpec): DataFrame =
-    spark.read.parquet(s"$silverRoot/${spec.prefix}")
+    spark.read.schema(spec.silverSchema).parquet(s"$silverRoot/${spec.prefix}")
 
   def mart(spark: SparkSession, silverRoot: String): DataFrame =
     martOver(spark, silverRoot,
@@ -140,10 +142,8 @@ object OlistVendas {
     * data was re-running the whole DAG (`@once`, re-read everything).
     */
   def incrementalMart(spark: SparkSession, silverRoot: String): DataFrame = {
-    val itemsSchema = spark.read
-      .parquet(s"$silverRoot/${OlistCatalog.orderItems.prefix}").schema
     val items = spark.readStream
-      .schema(itemsSchema)
+      .schema(OlistCatalog.orderItems.silverSchema)
       .parquet(s"$silverRoot/${OlistCatalog.orderItems.prefix}")
       .select("order_id", "product_id", "price", "freight_value")
     val orders = silver(spark, silverRoot, OlistCatalog.orders)
@@ -180,6 +180,11 @@ object OlistVendas {
     * (`:173-180`). With `buckets` set, the fact sides are first
     * re-laid-out through [[bucketedSilver]] (the one-time cost a real
     * ingest pays) and the mart reads the bucketed tables.
+    *
+    * The mirror is sent from the gold Parquet just written (read back
+    * with the mart's schema), so the joins and the pivot run once per
+    * build, not once per sink. Parquet reads are nullable, so every
+    * mirror column is nullable, as pandas `to_sql` makes them.
     */
   def run(spark: SparkSession, silverRoot: String, goldRoot: String,
       jdbc: Option[Sinks.JdbcTarget] = None,
@@ -190,7 +195,8 @@ object OlistVendas {
         martOver(spark, silverRoot, spark.table(itemsT), spark.table(ordersT))
       case None => mart(spark, silverRoot)
     }
-    m.write.mode("overwrite").parquet(s"$goldRoot/olist/vendas")
-    jdbc.foreach(t => Sinks.jdbcReplace(m, t))
+    val goldPath = s"$goldRoot/olist/vendas"
+    m.write.mode("overwrite").parquet(goldPath)
+    jdbc.foreach(t => Sinks.jdbcReplace(spark.read.schema(m.schema).parquet(goldPath), t))
   }
 }

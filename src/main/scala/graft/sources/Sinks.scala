@@ -16,9 +16,8 @@ object Sinks {
     * its own connection — at scale cap parallelism with
     * `numPartitions` so the database isn't the bottleneck.
     *
-    * Compile-only in this environment (no JDBC driver jar, no
-    * database); exercised in production via the standard DataSource V2
-    * jdbc path.
+    * SinksSpec and OlistPipelineSpec run it against embedded Derby; in
+    * production the same DataSource jdbc path takes the target's driver.
     */
   def jdbcReplace(df: DataFrame, t: JdbcTarget, numPartitions: Int = 8): Unit =
     df.coalesce(numPartitions)

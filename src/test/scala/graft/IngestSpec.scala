@@ -123,4 +123,17 @@ class IngestSpec extends SparkSpec {
     assert(rows(1).isNullAt(df.columns.indexOf("price")))
     assert(rows(1).getAs[Double]("freight_value") == 1.0)
   }
+
+  test("silver parquet schema equals the declared silverSchema for all eight tables") {
+    val bronze = tmpDir("bronze_all")
+    val silver = tmpDir("silver_all")
+    OlistCatalog.all.foreach { spec =>
+      writeCsv(s"$bronze/${spec.prefix}", "t.csv",
+        spec.schema.fieldNames.mkString(","), spec.schema.fieldNames.map(_ => "1").mkString(","))
+    }
+    IngestJob.runAll(spark, bronze, silver)
+    OlistCatalog.all.foreach { spec =>
+      assert(spark.read.parquet(s"$silver/${spec.prefix}").schema == spec.silverSchema, spec.name)
+    }
+  }
 }

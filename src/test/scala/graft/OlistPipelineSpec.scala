@@ -3,15 +3,17 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.DateType
 
-import graft.sources.{IngestJob, OlistCatalog, OlistVendas}
+import graft.sources.{IngestJob, OlistCatalog, OlistVendas, Sinks}
 
 /** End-to-end golden pipeline test (SURVEY.md §5.3): bronze CSVs for
   * all 8 Olist tables → IngestJob.runAll → OlistVendas silver→gold →
   * assert the 14-column mart schema (reference rename map,
   * `s2g/vendas.py:133-149`) and spot row values covering the pivot,
-  * the 4-way left join, fillna, upper, translate, and to_date.
+  * the 4-way left join, fillna, upper, translate, and to_date, plus
+  * the JDBC mirror (embedded Derby) holding exactly the gold rows.
   */
 class OlistPipelineSpec extends SparkSpec {
 
@@ -70,7 +72,9 @@ class OlistPipelineSpec extends SparkSpec {
 
     writeBronze(bronze)
     IngestJob.runAll(spark, bronze, silver)
-    OlistVendas.run(spark, silver, gold)
+    val t = Sinks.JdbcTarget(s"jdbc:derby:${tmpDir("gold_db")}/mirror;create=true",
+      "TB_VENDAS", "", "")
+    OlistVendas.run(spark, silver, gold, Some(t))
 
     val mart = spark.read.parquet(s"$gold/olist/vendas")
     assert(mart.columns.toSeq == Seq(
@@ -96,6 +100,23 @@ class OlistPipelineSpec extends SparkSpec {
     val o2 = rows(2)
     assert(o2.getAs[Double]("VALOR_BOLETO") == 59.90)
     assert(o2.getAs[String]("CIDADE_CLIENTE") == "RIO DE JANEIRO")
+
+    // The JDBC mirror holds exactly the gold Parquet rows, as a multiset.
+    def multiset(df: DataFrame): Map[Seq[Any], Int] =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (r, rs) => r -> rs.size }
+    val mirror = spark.read.format("jdbc")
+      .option("url", t.url).option("dbtable", t.table).load()
+    assert(mirror.columns.toSeq == mart.columns.toSeq)
+    assert(multiset(mirror) == multiset(mart))
+    // Its columns are all nullable. Spark's JDBC reader reports every
+    // column nullable whatever the DDL says, so ask Derby itself.
+    val conn = java.sql.DriverManager.getConnection(t.url)
+    try {
+      val cols = conn.getMetaData.getColumns(null, null, t.table, null)
+      val notNull = Iterator.continually(cols).takeWhile(_.next())
+        .filter(_.getString("IS_NULLABLE") != "YES").map(_.getString("COLUMN_NAME")).toList
+      assert(notNull.isEmpty, notNull)
+    } finally conn.close()
   }
 
   test("bucketed gold build replaces a stale silver location that has no catalog entry") {
